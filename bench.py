@@ -224,8 +224,8 @@ def _scaling_proof(spark, cpus: int) -> dict | None:
     """Multi-file scan scaling SELF-PROOF (r12 verdict item 3): write a
     fresh 32-file copy of lineitem to a temp dir (derived inside this
     run and deleted before it exits — never persisted or reused across
-    runs), then time a q1-shaped aggregation over 4 unioned scans of
-    it (128 scan tasks). Unlike the headline queries — whose
+    runs), then time a q1-shaped aggregation with a 256-step hash fold
+    over ONE scan of it (32 scan tasks). Unlike the headline queries — whose
     single-file inputs pin every scan stage to one task — this probe's
     wall time scales with available cores, so the pair of driver
     artifacts (32-core and low-core runs) carries a direct measurement

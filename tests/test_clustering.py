@@ -93,6 +93,16 @@ class TestKmeans:
         assert assigned.count() == 5
         assert len(cents) == 3
 
+    def test_lloyd_leaves_nothing_persisted(self, spark):
+        """The projection lloyd persists for its iterations is released
+        before it returns; the returned assignment still evaluates."""
+        jsc = spark.sparkContext._jsc
+        before = jsc.getPersistentRDDs().size()
+        for df in (_blobs(spark, k=2), _blobs(spark, n_per=7, k=3, dim=3)):
+            assigned, _, _ = K.lloyd(df, k=2, max_iter=2)
+            assert assigned.count() == df.count()
+        assert jsc.getPersistentRDDs().size() == before
+
     def test_inertia_nonincreasing(self, spark):
         df = _blobs(spark, k=3, spread=2.0)  # overlapping → needs iterations
         prev = None

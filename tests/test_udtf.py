@@ -94,6 +94,47 @@ class TestExecution:
         out = db.query_sql("SELECT c FROM chars(t.s, 2) ORDER BY c")
         assert [r.c for r in out.collect()] == ["a", "b"]
 
+    def test_udtf_registered_once_per_session(self, spark):
+        """Repeated queries, and new WarpDB objects with their own
+        ``asDeterministic()`` wrappers, register a UDTF with the session
+        once; a different class under the same name registers again."""
+        from unittest import mock
+
+        from pyspark.sql.functions import udtf
+        from pyspark.sql.udtf import UDTFRegistration
+
+        from warpdb_spark.plans import builder
+
+        @udtf(returnType="c: string")
+        class Upper:
+            def eval(self, s):
+                yield ((s or "").upper(),)
+
+        @udtf(returnType="c: string")
+        class Lower:
+            def eval(self, s):
+                yield ((s or "").lower(),)
+
+        src = spark.createDataFrame([Row(i=1, s="aB")])
+
+        def run(sql, fn=None):
+            db = WarpDB(df=src, table_name="t", spark=spark)
+            if fn is not None:
+                db.register_udtf("spy_case", fn)
+            return [tuple(r) for r in db.query_sql(sql).collect()]
+
+        builder._UDTF_REGISTERED.pop(spark, None)
+        with mock.patch.object(
+            UDTFRegistration, "register", autospec=True, side_effect=UDTFRegistration.register
+        ) as spy:
+            for _ in range(2):
+                run("SELECT ngram FROM split_ngrams(t.s, 1)")
+            for _ in range(2):
+                assert run("SELECT c FROM spy_case(t.s)", Upper.asDeterministic()) == [("AB",)]
+            assert run("SELECT c FROM spy_case(t.s)", Lower.asDeterministic()) == [("ab",)]
+        names = [c.args[1] for c in spy.call_args_list]
+        assert names == ["__wdb_udtf_split_ngrams", "__wdb_udtf_spy_case", "__wdb_udtf_spy_case"]
+
 
 class TestScalePlan:
     def test_source_filter_pushed_below_python_udtf(self, docs_db):

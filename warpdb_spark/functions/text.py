@@ -2,9 +2,17 @@
 Phase 3; BASELINE.json north star).
 
 Everything here is a pure pyspark.sql.functions composition — JVM-side,
-whole-stage-codegen-friendly, no Python in the hot path — so a scan
-over 100 TB of documents stays a single codegen'd map stage with no
-shuffle and no Arrow exchange.
+no Python in the hot path — so a scan over 100 TB of documents stays a
+single map stage with no shuffle and no Arrow exchange.
+
+Not all of it is codegen'd: Spark interprets the higher-order functions
+(transform, filter, aggregate, zip_with are CodegenFallback) element by
+element inside the stage. ``stopword_hits`` is one ``regexp_count``;
+these helpers stay HOF-interpreted: ``bpe_ish_token_count``,
+``mean_word_length`` (aggregate), ``alpha_word_fraction``,
+``alnum_tokens`` (filter), ``distinct_stopword_hits``, ``let``,
+``word_ngrams``, ``word_ngrams_from_tokens`` and ``rolling_fingerprint``
+(transform).
 """
 
 from __future__ import annotations
@@ -87,11 +95,37 @@ def word_ngrams(col: Column, n: int) -> Column:
     return let(tokens(col), lambda tk: word_ngrams_from_tokens(tk, n))
 
 
-def stopword_hits(col: Column, words: list[str]) -> Column:
-    """Count of tokens (lower-cased) that are in ``words``."""
+# Java's \s without UNICODE_CHARACTER_CLASS: the separators ``_WS`` splits on.
+_JAVA_WS = frozenset(" \t\n\x0b\f\r")
+
+
+def _java_quote(word: str) -> str:
+    """java.util.regex.Pattern.quote: the word as a literal in a Java regex."""
+    return "\\Q" + word.replace("\\E", "\\E\\\\E\\Q") + "\\E"
+
+
+def _stopword_hits_hof(col: Column, words: list[str]) -> Column:
+    """Tokenize, lower-case each token, count the tokens in ``words``:
+    two HOFs (transform, filter) that Spark interprets element by element."""
     lower_tokens = F.transform(tokens(col), F.lower)
     wl = F.array(*[F.lit(w) for w in words])
     return F.size(F.filter(lower_tokens, lambda t: F.array_contains(wl, t)))
+
+
+def stopword_hits(col: Column, words: list[str]) -> Column:
+    """Count of tokens (lower-cased) that are in ``words``.
+
+    One codegen'd ``regexp_count`` over ``lower(col)``: a word counts
+    where it is a whole whitespace token, i.e. bounded by ``\\s`` or
+    the string's ends. Lower-casing the text before splitting equals
+    lower-casing each token, since no case mapping looks across ``\\s``.
+    An empty word, or one holding whitespace, can match split's empty
+    or multi-token pieces that the regex cannot see, so such lists
+    keep the HOF form."""
+    if not words or any(w == "" or _JAVA_WS.intersection(w) for w in words):
+        return _stopword_hits_hof(col, words)
+    alternation = "|".join(_java_quote(w) for w in dict.fromkeys(words))
+    return F.regexp_count(F.lower(col), F.lit(f"(?<!\\S)(?:{alternation})(?!\\S)"))
 
 
 def cjk_char_count(col: Column) -> Column:

@@ -1240,8 +1240,9 @@ def embedding_quantize_int8(spark, sf_dir):
 
 def embedding_kmeans_assign(spark, sf_dir):
     """One Lloyd assignment step from engine-portable deterministic
-    init (k=8 centroids = vectors with lowest md5(vec_id)): broadcast
-    centroid join + HOF squared-L2 + min-struct argmin. dist2 is
+    init (k=8 centroids = vectors with lowest md5(vec_id)): one
+    Arrow-batched numpy pass scores every vector against all centroids
+    (the HOF squared-L2 fold, bit for bit) + min-struct argmin. dist2 is
     rounded before the argmin with ties to the lowest centroid id, so
     the assignment is reproducible in any double-precision engine —
     the DuckDB oracle replays it exactly. The iterative path on top of

@@ -121,8 +121,8 @@ def dedup_semantic_semdedup(spark, sf_dir):
     LOWER-id vector in the same cluster has cosine ≥ τ (0.45 — this
     corpus's near-dup band, see dedup_embedding_cosine).
 
-    Spark shape: md5-deterministic centroid init + one broadcast
-    assignment step (operators/clustering.py — engine-replayable), one
+    Spark shape: md5-deterministic centroid init + one nearest-centroid
+    assignment pass (operators/clustering.py — engine-replayable), one
     cluster-key self-join for the pair check (never all-pairs), then a
     pair→survivor anti-join. Output: every vector with its cluster and
     verdict, so the oracle checks assignment AND prune decisions.

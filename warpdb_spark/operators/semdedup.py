@@ -5,15 +5,15 @@ cluster instead of |c|² interpreted pair evaluations.
 The oracle-replayable entry (`inventory/retrieval_ops.py::
 dedup_semantic_semdedup`) keeps the HOF formulation DuckDB can replay;
 this operator is the production path: same md5-deterministic centroid
-init + broadcast assignment, then ``applyInPandas`` per cluster — each
-group materializes its (c × dim) matrix once, normalizes, and computes
+init + nearest-centroid assignment, then ``applyInPandas`` per cluster —
+each group materializes its (c × dim) matrix once, normalizes, and computes
 the full cosine Gram with a single matrix multiply. A vector is
 dropped iff some lower-id vector in its cluster has cosine ≥ tau (the
 same deterministic keeper rule).
 
-Scale: one assignment pass (broadcast centroids, no corpus shuffle
-beyond the id groupBy) + one shuffle on the cluster key; per-cluster
-memory is c² doubles, so k must scale with corpus size (k ≈ n/1000
+Scale: one assignment pass (centroids in the kernel's closure, no
+corpus shuffle beyond the id groupBy) + one shuffle on the cluster key;
+per-cluster memory is c² doubles, so k must scale with corpus size (k ≈ n/1000
 keeps clusters ~1000 → 8 MB Grams). Arrow moves each cluster batch
 once; numpy does the quadratic part at BLAS speed.
 """

@@ -17,6 +17,7 @@ OFFSET applied before LIMIT (src/warpdb.cpp:485-495), and executed joins
 from __future__ import annotations
 
 import functools
+import weakref
 
 from pyspark.sql import Column, DataFrame
 
@@ -454,6 +455,24 @@ def build_dataframe(tables: dict[str, DataFrame], q, registry=None) -> DataFrame
     return _build_select(tables, q, registry)
 
 
+# session -> {registered name: (wrapped class, deterministic, evalType)}
+_UDTF_REGISTERED = weakref.WeakKeyDictionary()
+
+
+def _register_udtf_once(spark, reg_name: str, fn) -> None:
+    """``spark.udtf.register`` only when ``reg_name`` is new to the
+    session or now names a different UDTF. Each registration costs a
+    JVM round trip and logs a "replaced a previously registered
+    function" warning. The key is the wrapped class, not ``fn``:
+    ``default_udtfs()`` builds a new ``asDeterministic()`` wrapper for
+    every WarpDB."""
+    key = (fn.func, fn.deterministic, fn.evalType)
+    seen = _UDTF_REGISTERED.setdefault(spark, {})
+    if seen.get(reg_name) != key:
+        spark.udtf.register(reg_name, fn)
+        seen[reg_name] = key
+
+
 def _build_table_func(tables: dict[str, DataFrame], tfc: A.TableFuncCall, registry) -> DataFrame:
     """Execute ``FROM udtf(table.col, lit...)`` as a Spark lateral join:
     the registered Python UDTF is applied once per source row, and the
@@ -498,7 +517,7 @@ def _build_table_func(tables: dict[str, DataFrame], tfc: A.TableFuncCall, regist
             )
     spark = src.sparkSession
     reg_name = f"__wdb_udtf_{name}"
-    spark.udtf.register(reg_name, registry.udtf(name))
+    _register_udtf_once(spark, reg_name, registry.udtf(name))
     view = _sq_alias("tfsrc")
     src.createOrReplaceTempView(view)
     # backtick-quote the column so names needing quoting (mixed case
