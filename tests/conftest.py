@@ -21,6 +21,19 @@ def sf_dir():
     return SF_DIR
 
 
+@pytest.fixture
+def persisted_frames(spark):
+    """Count of persisted RDDs minus local checkpoints: iterative
+    operators ``localCheckpoint`` per round by design, and those stay
+    registered as persisted until the JVM garbage-collects them."""
+
+    def count():
+        rdds = spark.sparkContext._jsc.getPersistentRDDs().values()
+        return sum(1 for r in rdds if not r.rdd().isLocallyCheckpointed())
+
+    return count
+
+
 @pytest.fixture(scope="session")
 def fixture_csv(tmp_path_factory):
     """The reference's 4-row data/test.csv:1-5, verbatim (FIXTURES.md §1.1)."""

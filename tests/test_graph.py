@@ -1,11 +1,12 @@
-"""connected_components vs a pure-python union-find reference."""
+"""connected_components vs a pure-python union-find reference, and the
+release of the frames pagerank persists for its iterations."""
 
 import random
 
 import pytest
 from pyspark.sql import functions as F
 
-from warpdb_spark.operators.graph import connected_components
+from warpdb_spark.operators.graph import connected_components, pagerank
 
 
 def _union_find(edges):
@@ -73,3 +74,15 @@ def test_random_graph_matches_union_find(spark, seed):
     ]
     edges = [(a, b) for a, b in edges if a != b]
     _check(spark, edges)
+
+
+def test_pagerank_leaves_nothing_persisted(spark, persisted_frames):
+    """The edge, node and degree frames pagerank persists for its
+    iterations are released before it returns; the returned ranks
+    still evaluate."""
+    before = persisted_frames()
+    for edges in ([(1, 2), (2, 3), (3, 1)], [(1, 2), (2, 3), (3, 4), (4, 2), (5, 1)]):
+        df = spark.createDataFrame(edges, ["src", "dst"])
+        ranks = pagerank(df, n_iter=2)
+        assert ranks.count() == len({n for e in edges for n in e})
+    assert persisted_frames() == before

@@ -455,9 +455,6 @@ def test_private_upper_behavior_tables_are_hashed():
     assert not FP._is_static_const(
         "warpdb_spark.plans.builder", "_SQ_SEQ", [0]
     )
-    assert not FP._is_static_const(
-        "warpdb_spark.inventory.curation_ext", "_JACCARD_EDGE_CACHE", []
-    )
     # private UPPER mutable table: hashed (the review's defect class)
     assert FP._is_static_const("warpdb_spark.x", "_CMS_PROBES", ["the"])
     assert FP._is_static_const("warpdb_spark.x", "_STOP", {"the"})

@@ -1,12 +1,17 @@
 """Tests for the scale-pattern inventory (inventory/scale_ops.py) and
 the triangle-counting operator: hand-computable graphs, EWMA recurrence
-properties, classifier determinism, and global-ordinal consistency."""
+properties, classifier determinism, global-ordinal consistency, and the
+``persist_scoped`` slot lifecycle."""
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
+from warpdb_spark import persist as P
 from warpdb_spark.inventory import scale_ops
 from warpdb_spark.operators.triangles import triangle_counts
+from warpdb_spark.persist import persist_scoped
 
 
 class TestTriangleCounts:
@@ -1338,76 +1343,182 @@ class TestWeightedMedian:
             assert r.weighted_median is not None
 
 
+def _slot(df, eager=False):
+    """One call site, so one ``persist_scoped`` slot, for the tests below."""
+    return persist_scoped(df, eager=eager)
+
+
+def _frame(spark, n=40, mod=7):
+    return spark.range(n).select((F.col("id") % mod).alias("k"), "id")
+
+
+def _sites():
+    return [s for s in P._slots if s[0] == _slot.__code__.co_filename]
+
+
+def _held():
+    """The (key, frame) held by ``_slot``'s slot."""
+    (site,) = _sites()
+    return P._slots[site]
+
+
+def _age_key():
+    """Re-key the held frame as if a previous Spark application held it."""
+    (site,) = _sites()
+    key, held = P._slots[site]
+    P._slots[site] = (("app-from-a-previous-session",) + key[1:], held)
+    return key
+
+
+@pytest.fixture
+def clean_slot():
+    def clear():
+        for site in _sites():
+            P._slots.pop(site)[1].unpersist()
+
+    clear()
+    yield
+    clear()
+
+
+@pytest.mark.usefixtures("clean_slot")
 class TestKeyedCacheSlots:
-    """The size-1 persisted-frame slots are KEYED (r10 advice): a
-    same-key call reuses the persisted frame (no silent recompute when
-    the two prefix-offset consumers compose over one sf_dir); eviction
-    happens only when a different key arrives."""
+    """``warpdb_spark.persist.persist_scoped`` on small synthetic frames:
+    one slot per call site, keyed by (applicationId, the persisted
+    frame's semantic hash, its column names). The behaviours were first
+    pinned on the prefix-offset, LPA and user-edge caches that the slot
+    helper replaced."""
 
-    def test_prefix_cache_reused_across_consumers(self, spark, sf_dir):
-        scale_ops._prefix_parts_cache.clear()
-        scale_ops.reshape_global_ordinal(spark, sf_dir)
-        first = scale_ops._prefix_parts_cache.get("df")
-        assert first is not None and first.storageLevel.useMemory
-        scale_ops.shard_assign_bytes(spark, sf_dir)
-        assert scale_ops._prefix_parts_cache.get("df") is first  # reused
-        assert first.storageLevel.useMemory  # still persisted
+    def test_prefix_cache_reused_across_consumers(self, spark):
+        """Two consumers composing over one input through a shared
+        helper site get the first call's frame back, still persisted."""
+        first = _slot(_frame(spark))
+        assert first.storageLevel.useMemory
+        second = _slot(_frame(spark))
+        assert second is first
+        assert first.storageLevel.useMemory
 
-    def test_prefix_cache_evicts_on_new_key(self, spark, sf_dir):
-        scale_ops._prefix_parts_cache.clear()
-        scale_ops.reshape_global_ordinal(spark, sf_dir)
-        first = scale_ops._prefix_parts_cache.get("df")
-        other = "/root/testdata/sf0.01"
-        scale_ops.reshape_global_ordinal(spark, other)
-        app = spark.sparkContext.applicationId
-        assert scale_ops._prefix_parts_cache.get("key") == (app, ("documents", other))
-        assert scale_ops._prefix_parts_cache.get("df") is not first
-        assert not first.storageLevel.useMemory  # evicted + unpersisted
-        scale_ops._prefix_parts_cache.clear()
+    def test_prefix_cache_evicts_on_new_key(self, spark):
+        """A different key evicts the slot's frame and unpersists it."""
+        first = _slot(_frame(spark))
+        first.count()
+        second = _slot(_frame(spark, n=50))
+        assert second is not first
+        assert _held()[1] is second
+        assert not first.storageLevel.useMemory
+        assert second.storageLevel.useMemory
 
-    def test_lpa_cache_keyed_by_sf_dir(self, spark, sf_dir):
-        scale_ops._lpa_edge_cache.clear()
-        scale_ops.graph_label_propagation(spark, sf_dir)
-        first = scale_ops._lpa_edge_cache.get("df")
-        app = spark.sparkContext.applicationId
-        assert scale_ops._lpa_edge_cache.get("key") == (app, sf_dir)
-        scale_ops.graph_label_propagation(spark, sf_dir)
-        assert scale_ops._lpa_edge_cache.get("df") is first  # reused
-        scale_ops._lpa_edge_cache.clear()
+    def test_lpa_cache_keyed_by_sf_dir(self, spark):
+        """The key is the persisted frame, not the upstream input: the
+        same input under a different parameter (or alias) misses, the
+        same input and parameter hits."""
+        first = _slot(_frame(spark, mod=7))
+        assert _slot(_frame(spark, mod=7)) is first
+        other = _slot(_frame(spark, mod=5))
+        assert other is not first
+        assert {r.k for r in other.collect()} == set(range(5))
+        renamed = _slot(_frame(spark, mod=5).withColumnRenamed("k", "bucket"))
+        assert renamed is not other and renamed.columns == ["bucket", "id"]
 
-    def test_session_restart_misses_cache(self, spark, sf_dir):
-        """r11 advice: a persisted frame cached under a PREVIOUS
-        SparkContext must not be returned by a same-base-key call in a
-        new session — the app id in the key forces a miss (and the
-        eviction path tolerates the dead frame)."""
-        scale_ops._prefix_parts_cache.clear()
-        scale_ops.reshape_global_ordinal(spark, sf_dir)
-        live_key = scale_ops._prefix_parts_cache.get("key")
-        stale = scale_ops._prefix_parts_cache.get("df")
-        # simulate the restart: same base key, different app id
-        scale_ops._prefix_parts_cache.update(
-            key=("app-from-a-previous-session", live_key[1]), df=stale
-        )
-        scale_ops.reshape_global_ordinal(spark, sf_dir)
-        assert scale_ops._prefix_parts_cache.get("key") == live_key
-        scale_ops._prefix_parts_cache.clear()
+    def test_session_restart_misses_cache(self, spark):
+        """A frame held under a previous application id is never handed
+        back: the call misses, and evicting the dead frame is tolerated."""
+        first = _slot(_frame(spark))
+        live_key = _age_key()
+        second = _slot(_frame(spark))
+        assert second is not first
+        assert _held()[0] == live_key
 
-    def test_clear_cache_rebuilds_unpersisted_hit(self, spark, sf_dir):
-        """r12: ``spark.catalog.clearCache()`` unpersists the cached
-        frame behind the dict's back; a same-key hit must then REBUILD
-        (and re-persist) instead of serving the unpersisted frame —
-        serving it silently reverts every consumer to the replicated
-        multi-shuffle derivation (and the audit then reads a
-        pathological snapshot of it inside downstream cached plans)."""
-        scale_ops._user_edges_cache.clear()
-        first = scale_ops._user_edges(spark, sf_dir)
+    def test_clear_cache_rebuilds_unpersisted_hit(self, spark):
+        """``spark.catalog.clearCache()`` unpersists the held frame behind
+        the slot's back; a same-key call then rebuilds and re-persists
+        instead of serving the unpersisted frame (``is_cached`` stays
+        stale-True here — ``storageLevel`` consults the cache manager)."""
+        first = _slot(_frame(spark))
         assert first.storageLevel.useMemory
         spark.catalog.clearCache()
-        # precondition: cleared behind our back (NB is_cached stays
-        # stale-True here — storageLevel consults the cache manager)
         assert not first.storageLevel.useMemory
-        second = scale_ops._user_edges(spark, sf_dir)
-        assert second.storageLevel.useMemory  # rebuilt + re-persisted
-        assert scale_ops._user_edges_cache.get("df") is second
-        scale_ops._user_edges_cache.clear()
-        second.unpersist()
+        second = _slot(_frame(spark))
+        assert second is not first
+        assert second.storageLevel.useMemory
+        assert _held()[1] is second
+
+    def test_hit_launches_no_job(self, spark):
+        sc = spark.sparkContext
+        first = _slot(_frame(spark), eager=True)
+        sc.setJobGroup("persist-scoped-hit", "hit")
+        try:
+            again = _slot(_frame(spark), eager=True)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert again is first
+        assert list(sc.statusTracker().getJobIdsForGroup("persist-scoped-hit")) == []
+
+    def test_equal_plan_miss_leaves_new_frame_cached(self, spark):
+        """On a miss whose old and new plans are equal (here: a stale
+        application id), the old frame is unpersisted BEFORE the new one
+        is persisted — the reverse order would drop the cache entry the
+        new frame resolves to."""
+        first = _slot(_frame(spark), eager=True)
+        _age_key()
+        second = _slot(_frame(spark))
+        assert second is not first
+        assert second.storageLevel.useMemory
+
+
+# Every inventory entry whose construction reaches a persist_scoped slot.
+SLOT_ROUTED_ENTRIES = (
+    "decontam_bloom_prefilter",
+    "dedup_cluster_components",
+    "dedup_containment_ngram",
+    "dedup_cross_modal_planted",
+    "dedup_cross_modal_verdict",
+    "dedup_embedding_lsh",
+    "dedup_keeper_by_quality",
+    "dedup_max_shared_run",
+    "dedup_minhash_estimate_calibration",
+    "dedup_minhash_lsh",
+    "dedup_minhash_survivors",
+    "dedup_ngram_jaccard",
+    "dedup_span_boilerplate",
+    "events_interarrival_profile",
+    "events_psi_value_drift",
+    "events_resample_interpolate",
+    "events_resample_locf",
+    "events_sessionize_by_type",
+    "graph_adamic_adar",
+    "graph_degree_distribution",
+    "graph_label_propagation",
+    "graph_neighbor_jaccard",
+    "graph_triangle_count",
+    "multimodal_audio_neardup",
+    "multimodal_dhash_neardup",
+    "reshape_global_ordinal",
+    "reshape_leakage_safe_split",
+    "search_eval_ndcg",
+    "shard_assign_bytes",
+    "similarity_mmr_rerank",
+    "stats_chi2_independence",
+    "stream_ks_drift_by_batch",
+    "stream_psi_drift_by_batch",
+    "stream_unified_drift_by_batch",
+    "text_kneser_ney_bigram",
+    "text_source_vocab_jaccard",
+)
+
+
+@pytest.mark.slow
+def test_slot_routed_entries_stay_bounded_across_corpora(spark, sf_dir, persisted_frames):
+    """A long-lived session sweeping corpora holds at most one frame per
+    slot: after a pass over a second, larger corpus the persisted-frame
+    count is no greater than after the first pass."""
+    from warpdb_spark import inventory
+
+    queries, _ = inventory.load_all()
+    larger = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    counts = []
+    for corpus in (sf_dir, larger):
+        for name in SLOT_ROUTED_ENTRIES:
+            queries[name](spark, corpus).collect()
+        counts.append(persisted_frames())
+    assert counts[1] <= counts[0], counts

@@ -14,8 +14,6 @@ from __future__ import annotations
 import re
 import sys
 
-NODE = re.compile(r"([A-Za-z][A-Za-z0-9_ ]*?)\s*(?:[A-Za-z]+ Build\w+ )?\((\d+)\)")
-
 
 def live_counts(text: str) -> dict:
     ops: dict[int, str] = {}

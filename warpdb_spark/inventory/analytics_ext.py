@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from warpdb_spark.persist import persist_scoped
 from warpdb_spark.sources.readers import cached_table, ns_to_timestamp
 
 
@@ -1455,8 +1456,6 @@ def stream_psi_drift_by_batch(spark, sf_dir, cents_counts=None):
     has ~6 parentless consumers in the final plan (base×3, cur×2,
     tot_c×2 expansions), each of which re-scanned events and re-ran
     the corpus aggregation (guide §5 caching: reused AND expensive)."""
-    from pyspark import StorageLevel
-
     if cents_counts is not None:
         counts = cents_counts.groupBy(
             "batch_id", F.floor(F.col("cents") / 2500).alias("bucket")
@@ -1472,9 +1471,9 @@ def stream_psi_drift_by_batch(spark, sf_dir, cents_counts=None):
             F.floor(F.col("event_id") / _PSI_BATCH).alias("batch_id"),
             F.floor(cents / 2500).alias("bucket"),
         )
-        counts = rows.groupBy("batch_id", "bucket").agg(
-            F.count(F.lit(1)).alias("n")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        counts = persist_scoped(
+            rows.groupBy("batch_id", "bucket").agg(F.count(F.lit(1)).alias("n"))
+        )
     return _psi_from_counts(counts)
 
 
@@ -1500,14 +1499,10 @@ def stream_ks_drift_by_batch(spark, sf_dir, cents_counts=None):
     Standalone, the leg persists its own counts aggregate — same
     multi-consumer rationale as the PSI leg (the r12 plan re-scanned
     events ~6 times, once per parentless counts reference)."""
-    from pyspark import StorageLevel
-
     if cents_counts is not None:
         counts = cents_counts
     else:
-        counts = _drift_cents_counts(spark, sf_dir).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+        counts = persist_scoped(_drift_cents_counts(spark, sf_dir))
     base = counts.filter(F.col("batch_id") == 0).select(
         "cents", F.col("n").alias("n_b")
     )
@@ -1600,11 +1595,7 @@ def stream_unified_drift_by_batch(spark, sf_dir):
     it exactly — so the whole report makes a single pass over events
     (the r12 plan had 14 live parquet scans: each leg re-derived its
     counts once per parentless plan branch)."""
-    from pyspark import StorageLevel
-
-    cc = _drift_cents_counts(spark, sf_dir).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    cc = persist_scoped(_drift_cents_counts(spark, sf_dir))
     psi = stream_psi_drift_by_batch(spark, sf_dir, cents_counts=cc)
     ks = stream_ks_drift_by_batch(spark, sf_dir, cents_counts=cc).select(
         "batch_id", "ks_d", "ks_at_value", "ks_stat"

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from warpdb_spark.api import WarpDB
+from warpdb_spark.persist import persist_scoped
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1602,15 +1603,13 @@ def events_resample_locf(spark, sf_dir):
     # exactly ONCE no matter the corpus size. Without this, Catalyst
     # prunes each consumer's subtree differently and re-scans events
     # three times (no exchange reuse across differently-pruned plans).
-    agg = (
-        ev.groupBy("event_type", "bucket")
-        .agg(
+    agg = persist_scoped(
+        ev.groupBy("event_type", "bucket").agg(
             F.round(F.sum("value"), 6).alias("bucket_value"),
             F.count(F.lit(1)).alias("n_events_raw"),
-        )
-        .persist()
+        ),
+        eager=True,
     )
-    agg.count()
     bounds = agg.agg(F.min("bucket").alias("lo"), F.max("bucket").alias("hi"))
     grid = (
         bounds.select(F.explode(F.sequence("lo", "hi")).alias("bucket"))

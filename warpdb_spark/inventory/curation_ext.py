@@ -37,6 +37,7 @@ from warpdb_spark.functions.text import (
     translate_count,
 )
 from warpdb_spark.inventory.scale_ops import _user_edges
+from warpdb_spark.persist import persist_scoped
 from warpdb_spark.sources.readers import cached_table, ns_to_timestamp
 
 
@@ -246,15 +247,12 @@ def stats_chi2_independence(spark, sf_dir):
     # feeds FOUR parentless branches (row marginal, column marginal,
     # grand total, and the output join) — un-persisted, each re-scanned
     # events and re-ran the corpus aggregation (4 parquet scans -> 1).
-    from pyspark import StorageLevel as _SL
-
-    obs = (
+    obs = persist_scoped(
         ev.select("event_type", part.alias("daypart"))
         .groupBy("event_type", "daypart")
-        .agg(F.count(F.lit(1)).alias("obs"))
-        .persist(_SL.MEMORY_AND_DISK)
+        .agg(F.count(F.lit(1)).alias("obs")),
+        eager=True,
     )
-    obs.count()
     rt = obs.groupBy("event_type").agg(F.sum("obs").alias("rt"))
     ct = obs.groupBy("daypart").agg(F.sum("obs").alias("ct"))
     n = obs.agg(F.sum("obs").alias("n"))
@@ -649,10 +647,6 @@ def window_distribution_binned(spark, sf_dir):
 # wedge-center degree cap; 1M = non-binding at oracle scale (DuckDB
 # replays the full sum), dropped to O(100) on dense production graphs
 _JACCARD_CENTER_CAP = 1_000_000
-# Bounded (size-1) slot for graph_neighbor_jaccard's persisted edge
-# list: the newest call evicts + unpersists the previous corpus's
-# cache so long-lived multi-sf_dir sessions don't accumulate entries.
-_JACCARD_EDGE_CACHE: list = []
 
 
 def graph_neighbor_jaccard(spark, sf_dir):
@@ -672,17 +666,7 @@ def graph_neighbor_jaccard(spark, sf_dir):
     counts would bias the ratio low — r6 advice). The oracle replays
     the identical cap, so the entry stays hash-checkable even on a
     dataset whose max degree exceeds the cap. Integer counts exact;
-    the only float is the final ratio.
-
-    Cache retention: the persisted edge list is held in a bounded
-    module-level slot (size 1) — invoking this entry again (same or
-    different ``sf_dir``) unpersists the previous corpus's edge list
-    first, so a long-lived session sweeping many sf_dirs carries at
-    most ONE cached edge list, not one per corpus (r7 advice).
-    Unpersisting is correctness-neutral for any still-lazy frame from
-    an earlier call: Spark recomputes the lineage on demand."""
-    from pyspark import StorageLevel
-
+    the only float is the final ratio."""
     edges = _user_edges(spark, sf_dir)
     # persist + eager count: the directed edge list feeds FIVE branches
     # (full degrees, both wedge sides, capped endpoint degrees via the
@@ -692,23 +676,12 @@ def graph_neighbor_jaccard(spark, sf_dir):
     # eager count matters for the same reason as the LSH signature
     # cache: the branches fan out of ONE job, and a cold cache would
     # fill concurrently (the edge window would still run multiple
-    # times). MEMORY_AND_DISK: 2 longs/row, spills instead of dying.
-    # Evict BEFORE persisting the new frame: a repeat call on the same
-    # sf_dir produces an identical plan, so persist() after eviction
-    # re-registers the cache cleanly (persist-then-unpersist would drop
-    # the very cache the new frame resolves to).
-    while _JACCARD_EDGE_CACHE:
-        try:
-            _JACCARD_EDGE_CACHE.pop().unpersist()
-        except Exception:  # noqa: BLE001 — a dead SparkContext is fine
-            pass
-    directed = (
+    # times).
+    directed = persist_scoped(
         edges.unionAll(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .select(F.col("a").alias("z"), F.col("b").alias("nbr"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .select(F.col("a").alias("z"), F.col("b").alias("nbr")),
+        eager=True,
     )
-    _JACCARD_EDGE_CACHE.append(directed)
-    directed.count()
     full_deg = directed.groupBy("nbr").agg(F.count(F.lit(1)).alias("deg"))
     # center-degree cap: production knob, non-binding on the test
     # graph (the graph_adamic_adar discipline). On DENSE graphs it is
@@ -1188,15 +1161,12 @@ def events_psi_value_drift(spark, sf_dir):
     # per_bucket, per_type, n_total), each of which re-scanned events
     # and re-ran the corpus aggregation in the r12 plan (6 parquet
     # scans -> 1).
-    from pyspark import StorageLevel as _SL
-
-    g = (
+    g = persist_scoped(
         ev.select("event_type", bucket.alias("bucket"))
         .groupBy("event_type", "bucket")
-        .agg(F.count("*").alias("n_tb"))
-        .persist(_SL.MEMORY_AND_DISK)
+        .agg(F.count("*").alias("n_tb")),
+        eager=True,
     )
-    g.count()
     types = g.select("event_type").distinct()
     buckets = g.select("bucket").distinct()
     full = (
@@ -1536,18 +1506,15 @@ def decontam_bloom_prefilter(spark, sf_dir):
     # parentless branches (the bitmap fold and the exact true-hit
     # broadcast) — un-persisted, each re-scanned and re-sharded the
     # eval slice. Bounded by the benchmark-union gram count (the
-    # quantity the bitmap exists to compress); MEMORY_AND_DISK spills.
-    # The CORPUS side's two passes (tot + probe) are the bloom
-    # pattern's documented price (guide §3.2) and stay.
-    from pyspark import StorageLevel as _SL
-
-    eval_grams = (
+    # quantity the bitmap exists to compress). The CORPUS side's two
+    # passes (tot + probe) are the bloom pattern's documented price
+    # (guide §3.2) and stay.
+    eval_grams = persist_scoped(
         docs.filter(F.col("doc_id") % 17 == 0)
         .select(F.explode(grams3).alias("gram"))
-        .distinct()
-        .persist(_SL.MEMORY_AND_DISK)
+        .distinct(),
+        eager=True,
     )
-    eval_grams.count()
     words = _bloom_words(eval_grams, "gram", _DECONTAM_BLOOM_BITS)
     pairs = docs.filter(F.col("doc_id") % 17 != 0).select(
         "doc_id", F.explode(grams3).alias("gram")

@@ -112,7 +112,6 @@ def _is_immutable_data(value, depth: int = 0) -> bool:
 RUNTIME_STATE: frozenset = frozenset(
     {
         ("warpdb_spark.plans.builder", "_SQ_SEQ"),
-        ("warpdb_spark.inventory.curation_ext", "_JACCARD_EDGE_CACHE"),
     }
 )
 

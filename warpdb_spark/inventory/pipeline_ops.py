@@ -22,6 +22,7 @@ from warpdb_spark.operators import dedup as D
 from warpdb_spark.operators import multimodal as M
 from warpdb_spark.operators import similarity as S
 from warpdb_spark.operators.asof import asof_join, range_join
+from warpdb_spark.persist import persist_scoped
 from warpdb_spark.sources.readers import cached_table, ns_to_timestamp
 from warpdb_spark.streaming.windows import (
     interval_join,
@@ -1428,9 +1429,9 @@ def multimodal_dhash_neardup(spark, sf_dir, docs=None):
                 )
             yield _pd.DataFrame({"doc_id": pdf["doc_id"], "bits": bits})
 
-    hb = docs.mapInPandas(
-        gen, _ST([_SF("doc_id", _Long()), _SF("bits", _Str())])
-    ).persist()
+    hb = persist_scoped(
+        docs.mapInPandas(gen, _ST([_SF("doc_id", _Long()), _SF("bits", _Str())]))
+    )
     keyed = hb.select(
         "doc_id",
         F.explode(
@@ -1560,9 +1561,9 @@ def multimodal_audio_neardup(spark, sf_dir, docs=None):
                 )
             yield _pd.DataFrame({"doc_id": pdf["doc_id"], "bits": bits})
 
-    hb = docs.mapInPandas(
-        gen, _ST([_SF("doc_id", _Long()), _SF("bits", _Str())])
-    ).persist()
+    hb = persist_scoped(
+        docs.mapInPandas(gen, _ST([_SF("doc_id", _Long()), _SF("bits", _Str())]))
+    )
     bands = [(0, 1, 10), (1, 11, 10), (2, 21, 11)]
     keyed = hb.select(
         "doc_id",

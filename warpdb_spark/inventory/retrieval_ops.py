@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from warpdb_spark.persist import persist_scoped
 from warpdb_spark.sources.readers import cached_table, ns_to_timestamp
 
 
@@ -224,12 +225,10 @@ def events_resample_interpolate(spark, sf_dir):
         F.floor(F.col("ts").cast("long") / bucket_s).alias("bucket"),
         "value",
     )
-    agg = (
-        ev.groupBy("event_type", "bucket")
-        .agg(F.avg("value").alias("mean_value"))
-        .persist()
+    agg = persist_scoped(
+        ev.groupBy("event_type", "bucket").agg(F.avg("value").alias("mean_value")),
+        eager=True,
     )
-    agg.count()
     bounds = agg.agg(F.min("bucket").alias("lo"), F.max("bucket").alias("hi"))
     grid = bounds.select(F.explode(F.sequence("lo", "hi")).alias("bucket")).crossJoin(
         F.broadcast(agg.select("event_type").distinct())
@@ -496,11 +495,13 @@ def search_eval_ndcg(spark, sf_dir):
     # scans in the optimized plan for a 20-row eval table. Two
     # bounded eager materializations truncate every copy; at 100 TB
     # each avoided copy is a full corpus scan + fusion recompute.
-    cc = cand.join(
-        scored.select(F.col("vec_id").alias("doc_id"), F.col("cos").alias("c_cos")),
-        "doc_id",
-    ).persist()
-    cc.count()
+    cc = persist_scoped(
+        cand.join(
+            scored.select(F.col("vec_id").alias("doc_id"), F.col("cos").alias("c_cos")),
+            "doc_id",
+        ),
+        eager=True,
+    )
     ahead = (
         scored.crossJoin(
             F.broadcast(cc.select(F.col("doc_id").alias("c_id"), "c_cos"))
@@ -512,16 +513,15 @@ def search_eval_ndcg(spark, sf_dir):
         .groupBy("c_id")
         .agg(F.count(F.lit(1)).alias("n_ahead"))
     )
-    rk = (
-        cc.join(ahead, cc.doc_id == ahead.c_id, "left")
-        .select(
+    # ≤20 rows; both the DCG and ideal-DCG branches read it
+    rk = persist_scoped(
+        cc.join(ahead, cc.doc_id == ahead.c_id, "left").select(
             "doc_id",
             "pos",
             (F.coalesce("n_ahead", F.lit(0)) + 1).cast("int").alias("exact_rank"),
-        )
-        .persist()  # ≤20 rows; both the DCG and ideal-DCG branches read it
+        ),
+        eager=True,
     )
-    rk.count()
     rel = (
         F.when(F.col("exact_rank") <= 5, 3)
         .when(F.col("exact_rank") <= 10, 2)

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from warpdb_spark.persist import persist_scoped
 from warpdb_spark.sources.readers import cached_table, ns_to_timestamp
 
 
@@ -54,10 +55,6 @@ def _nulls_last_value_chunk(col: str = "value"):
     )
 
 
-#: (applicationId, sf_dir)-keyed persisted edge list — see _user_edges.
-_user_edges_cache: dict = {}
-
-
 def _user_edges(spark, sf_dir):
     """Undirected canonical user-interaction edges — consecutive users
     within an event_type (linear construction), self-loops dropped,
@@ -76,47 +73,27 @@ def _user_edges(spark, sf_dir):
     grows with the data — and the boundary stitch runs over one
     aggregated row per (type, hour).
 
-    Persisted behind a session-keyed cache (r12, guide §5): graph
+    Persisted in a ``persist_scoped`` slot (r12, guide §5): graph
     entries reference the edge list from several plan branches (the
     triangle orientation alone reads it five times), and without a
     cache Catalyst REPLICATES this whole multi-shuffle derivation per
     reference — graph_triangle_count's pre-fix plan held 90 copies of
-    the events scan. One eager materialization per (applicationId,
-    sf_dir) truncates every consumer's plan at an InMemoryTableScan;
-    a session restart or a different sf_dir misses and rebuilds."""
+    the events scan. One eager materialization per corpus truncates
+    every consumer's plan at an InMemoryTableScan."""
     from warpdb_spark.operators.sequence import grouped_lead_pairs, hour_chunk
 
-    # The key carries the ANALYZED-PLAN semantic hash of the events
-    # frame, not just (session, sf_dir): sf_dir names the data only
-    # when _t actually reads it — tests (and any caller) can inject a
-    # different frame under the same sf_dir, and a (session, sf_dir)
-    # key would then serve a stale persisted edge list built from the
-    # previous frame. semanticHash is one py4j call on an
-    # already-analyzed plan; for the production reader the plan is the
-    # same relation per (session, sf_dir), so the cache still hits.
     ev = _t(spark, sf_dir, "events")
-    edge_key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        ev._jdf.queryExecution().analyzed().semanticHash(),
-    )
-    hit = _keyed_cache_hit(_user_edges_cache, edge_key)
-    if hit is not None:
-        return hit
     nx = grouped_lead_pairs(
         ev, "event_type", ["ts", "event_id"], "user_id", hour_chunk("ts")
     )
-    edges = (
+    return persist_scoped(
         nx.filter(F.col("dst") != F.col("src"))
         .select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
-        .distinct()
-        .persist()
+        .distinct(),
+        eager=True,
     )
-    edges.count()
-    _user_edges_cache.update(key=edge_key, df=edges)
-    return edges
 
 
 # --- graph: triangle counting ------------------------------------------------
@@ -173,9 +150,11 @@ def similarity_mmr_rerank(spark, sf_dir):
     lam, mu = _MMR_LAMBDA, _MMR_MU
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    short = S.cosine_topk(
-        emb, queries, k=_MMR_SHORTLIST, id_col="vec_id", vec_col="embedding"
-    ).persist()
+    short = persist_scoped(
+        S.cosine_topk(
+            emb, queries, k=_MMR_SHORTLIST, id_col="vec_id", vec_col="embedding"
+        )
+    )
 
     # pairwise sims among each query's shortlist members (≤ k² rows/query)
     va = emb.select(F.col("vec_id").alias("id_x"), F.col("embedding").alias("vx"))
@@ -197,7 +176,7 @@ def similarity_mmr_rerank(spark, sf_dir):
         )
         .filter(F.col("id_x") != F.col("id_y"))
     )
-    sims = (
+    sims = persist_scoped(
         pairs.join(F.broadcast(va), "id_x")
         .join(F.broadcast(vb), "id_y")
         .select(
@@ -206,7 +185,6 @@ def similarity_mmr_rerank(spark, sf_dir):
             "id_y",
             F.round(V.cosine_similarity(F.col("vx"), F.col("vy")), 6).alias("s"),
         )
-        .persist()
     )
 
     s1 = short.filter(F.col("rank") == 1).select(
@@ -420,24 +398,25 @@ def dedup_containment_ngram(spark, sf_dir):
     frame (persisted once, three consumers) back to both pair sides —
     JVM array ops in whole-stage codegen.
     """
-    from pyspark import StorageLevel
     from warpdb_spark.functions import text as T
     from warpdb_spark.operators.dedup import capped_key_pairs
 
     docs = _t(spark, sf_dir, "documents")
-    sh = docs.select(
-        "doc_id",
-        F.when(
-            F.size(F.split(T.normalized_text(F.col("text")), " ")) < F.lit(3),
-            F.array(T.normalized_text(F.col("text"))),
-        )
-        .otherwise(
-            F.array_distinct(
-                T.word_ngrams(T.normalized_text(F.col("text")), 3)
+    sh = persist_scoped(
+        docs.select(
+            "doc_id",
+            F.when(
+                F.size(F.split(T.normalized_text(F.col("text")), " ")) < F.lit(3),
+                F.array(T.normalized_text(F.col("text"))),
             )
+            .otherwise(
+                F.array_distinct(
+                    T.word_ngrams(T.normalized_text(F.col("text")), 3)
+                )
+            )
+            .alias("s"),
         )
-        .alias("s"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
     cand = capped_key_pairs(_anchor_keys(sh, "s"), _ANCHOR_CAP)
     a = sh.select(F.col("doc_id").alias("id_a"), F.col("s").alias("sa"))
     b = sh.select(F.col("doc_id").alias("id_b"), F.col("s").alias("sb"))
@@ -509,7 +488,6 @@ def dedup_max_shared_run(spark, sf_dir):
     whole-stage codegen. Anchor keys are md5-16 so DuckDB replays the
     identical candidate set.
     """
-    from pyspark import StorageLevel
     from warpdb_spark.functions import text as T
     from warpdb_spark.operators.dedup import capped_key_pairs
 
@@ -520,14 +498,18 @@ def dedup_max_shared_run(spark, sf_dir):
     toksed = docs.select(
         "doc_id", T.tokens(T.normalized_text(F.col("text"))).alias("tk")
     )
-    sh = toksed.select(
-        "doc_id",
-        F.array_distinct(T.word_ngrams_from_tokens(F.col("tk"), 3)).alias("ng3"),
-        *[
-            F.array_distinct(T.word_ngrams_from_tokens(F.col("tk"), n)).alias(f"ng{n}")
-            for n in ns
-        ],
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    sh = persist_scoped(
+        toksed.select(
+            "doc_id",
+            F.array_distinct(T.word_ngrams_from_tokens(F.col("tk"), 3)).alias("ng3"),
+            *[
+                F.array_distinct(T.word_ngrams_from_tokens(F.col("tk"), n)).alias(
+                    f"ng{n}"
+                )
+                for n in ns
+            ],
+        )
+    )
     cand = capped_key_pairs(_anchor_keys(sh, f"ng{_RUN_MIN}"), _ANCHOR_CAP)
     a = sh.select(
         F.col("doc_id").alias("id_a"),
@@ -1314,15 +1296,10 @@ def text_kneser_ney_bigram(spark, sf_dir):
     # re-ran the corpus explode + aggregation (5 parquet scans in the
     # r12 plan; now 2: this build + the eval slice). The frame is the
     # distinct-bigram set — "broadcast-or-AQE territory" per the scale
-    # note above — and MEMORY_AND_DISK spills rather than dying.
-    from pyspark import StorageLevel as _SL
-
-    c2 = (
-        trn.groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("c2"))
-        .persist(_SL.MEMORY_AND_DISK)
+    # note above.
+    c2 = persist_scoped(
+        trn.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2")), eager=True
     )
-    c2.count()
     w1s = c2.groupBy("w1").agg(
         F.sum("c2").alias("cw1"), F.count(F.lit(1)).alias("n1w1")
     )
@@ -1571,58 +1548,7 @@ def range_join_session_overlap(spark, sf_dir):
 # --- reshape: scale-safe global row numbering --------------------------------
 
 
-# Bounded (size-1) slot for the prefix-offset scaffold's persisted
-# range-partitioned frame: the newest call evicts + unpersists the
-# previous one so long-lived sessions sweeping entries/sf_dirs carry
-# at most one cached copy (same discipline as _JACCARD_EDGE_CACHE).
-# KEYED by the input identity (r10 advice): a same-key call REUSES the
-# persisted frame instead of evicting it, so composing the two
-# consumers (reshape_global_ordinal + shard_assign_bytes) over one
-# sf_dir — or collecting one's lazy result after calling the other —
-# reads the cache rather than silently recomputing the full
-# repartitionByRange pass. Eviction happens only on a DIFFERENT key;
-# a lazy DataFrame returned under a previous key must be materialized
-# before a different-key call (recompute is deterministic for the
-# parquet inputs here, but don't rely on it for other sources).
-_prefix_parts_cache: dict = {}
-
-
-def _evict_keyed_cache(cache: dict, key) -> None:
-    if cache and cache.get("key") != key:
-        try:
-            cache.pop("df").unpersist()
-        except Exception:  # noqa: BLE001 — a dead SparkContext is fine
-            pass
-        cache.clear()
-
-
-def _keyed_cache_hit(cache: dict, key):
-    """Evict on key change, then return the cached frame ONLY if it is
-    still actually persisted. ``spark.catalog.clearCache()`` (tests,
-    co-tenants of the session) unpersists the frame behind the dict's
-    back; serving it un-persisted silently reverts every consumer to
-    the replicated multi-shuffle derivation the cache exists to
-    truncate (results stay correct, the plan goes pathological — and
-    downstream per-call persists then snapshot that pathological tree
-    into their own cached plans). ``storageLevel`` consults the live
-    cache manager (``is_cached`` does NOT — it stays True after
-    clearCache); one py4j call, no job. Returns None on any miss; the
-    caller rebuilds and re-registers."""
-    _evict_keyed_cache(cache, key)
-    if cache.get("key") != key:
-        return None
-    df = cache["df"]
-    try:
-        lvl = df.storageLevel
-        if lvl.useMemory or lvl.useDisk:
-            return df
-    except Exception:  # noqa: BLE001 — dead context: rebuild below
-        pass
-    cache.clear()
-    return None
-
-
-def _partition_prefix_offsets(df: DataFrame, measure, cache_key):
+def _partition_prefix_offsets(df: DataFrame, measure):
     """Shared two-phase prefix-sum scaffolding (reshape_global_ordinal /
     shard_assign_bytes) — the DataFrame zipWithIndex: range-repartition
     on doc_id into a CORPUS-PROPORTIONAL partition count, aggregate
@@ -1643,22 +1569,16 @@ def _partition_prefix_offsets(df: DataFrame, measure, cache_key):
     and joins back as a broadcast. No driver collect, no create_map
     literal whose expression tree would grow with the partition count.
     Range partitions are ascending in partition id, so within-partition
-    state + offset is globally consistent regardless of boundaries."""
-    # session identity in the key (r11 advice): after a Spark session
-    # restart, a same-key hit would hand back a persisted frame bound
-    # to the STOPPED SparkContext and fail at use time — a new app id
-    # misses (and evicts) instead.
-    cache_key = (df.sparkSession.sparkContext.applicationId, cache_key)
-    hit = _keyed_cache_hit(_prefix_parts_cache, cache_key)
-    if hit is not None:
-        parts = hit
-    else:
-        n_parts = max(8, df.rdd.getNumPartitions())
-        parts = df.repartitionByRange(n_parts, "doc_id").withColumn(
+    state + offset is globally consistent regardless of boundaries.
+
+    The range-partitioned frame sits in a ``persist_scoped`` slot, so
+    the two consumers composed over one corpus share one copy."""
+    n_parts = max(8, df.rdd.getNumPartitions())
+    parts = persist_scoped(
+        df.repartitionByRange(n_parts, "doc_id").withColumn(
             "pid", F.spark_partition_id()
         )
-        parts = parts.persist()
-        _prefix_parts_cache.update(key=cache_key, df=parts)
+    )
     w = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
     offsets = (
         parts.groupBy("pid")
@@ -1686,9 +1606,7 @@ def reshape_global_ordinal(spark, sf_dir):
     consistent regardless of where the sampled boundaries land.
     """
     docs = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    parts, offsets = _partition_prefix_offsets(
-        docs, F.count(F.lit(1)), cache_key=("documents", sf_dir)
-    )
+    parts, offsets = _partition_prefix_offsets(docs, F.count(F.lit(1)))
     w = Window.partitionBy("pid").orderBy("doc_id")
     return parts.join(offsets, "pid").select(
         "doc_id",
@@ -1771,7 +1689,6 @@ def dedup_minhash_estimate_calibration(spark, sf_dir):
     block; banded buckets are capped, so candidates stay linear in
     corpus size. Gram/signature arrays join back once per side; all
     min/compare work is JVM codegen."""
-    from pyspark import StorageLevel
     from warpdb_spark.functions import text as T
     from warpdb_spark.operators.dedup import capped_key_pairs
 
@@ -1790,11 +1707,10 @@ def dedup_minhash_estimate_calibration(spark, sf_dir):
         ).alias(f"h{s}")
 
     sigs = [_sig(s) for s in range(_MH_CAL_SEEDS)]
-    sh = (
+    sh = persist_scoped(
         docs.select("doc_id", grams.alias("g"))
         .filter(F.size("g") > 0)
         .select("doc_id", "g", *sigs)
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     keyed = sh.select(
         "doc_id",
@@ -2072,9 +1988,7 @@ def shard_assign_bytes(spark, sf_dir):
     exactly.
     """
     docs = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    parts, offsets = _partition_prefix_offsets(
-        docs, F.sum("n_chars"), cache_key=("documents", sf_dir)
-    )
+    parts, offsets = _partition_prefix_offsets(docs, F.sum("n_chars"))
     w = (
         Window.partitionBy("pid")
         .orderBy("doc_id")
@@ -2125,14 +2039,12 @@ def text_source_vocab_jaccard(spark, sf_dir):
     # (4 parquet scans in the r12 plan). The eager count matters here
     # because the branches are independent leaf stages an adaptive plan
     # can launch concurrently against a cold cache.
-    from pyspark import StorageLevel as _SL
-
-    top = (
-        cnt.select("source", "term", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= _VJ_TOP)
-        .persist(_SL.MEMORY_AND_DISK)
+    top = persist_scoped(
+        cnt.select("source", "term", F.row_number().over(w).alias("rn")).filter(
+            F.col("rn") <= _VJ_TOP
+        ),
+        eager=True,
     )
-    top.count()
     sizes = top.groupBy("source").agg(F.count(F.lit(1)).alias("n_sig"))
     a = top.select(F.col("source").alias("src_a"), "term")
     b = top.select(F.col("source").alias("src_b"), "term")
@@ -2196,13 +2108,11 @@ def events_interarrival_profile(spark, sf_dir):
     # persist (r13): grouped_global_rank consumes its input from two
     # parentless branches (local ranks + per-chunk totals), so the
     # whole lead-pairs pipeline above ran twice (4 parquet scans in the
-    # r12 plan). Two narrow columns; MEMORY_AND_DISK spills rather than
-    # dying (the events_sessionize_by_type pattern).
-    from pyspark import StorageLevel as _SL
-
-    g = pairs.select(
-        "event_type", (F.col("dst") - F.col("src")).alias("gap")
-    ).persist(_SL.MEMORY_AND_DISK)
+    # r12 plan). Two narrow columns (the events_sessionize_by_type
+    # pattern).
+    g = persist_scoped(
+        pairs.select("event_type", (F.col("dst") - F.col("src")).alias("gap"))
+    )
     r = grouped_global_rank(
         g, "event_type", ["gap"], F.col("gap"), rank_col="rn", n_col="n"
     )
@@ -2317,15 +2227,6 @@ def graph_degree_distribution(spark, sf_dir):
 
 _LPA_ROUNDS = 2  # fixed so the DuckDB oracle can unroll the rounds
 
-# Bounded (size-1) slot for LPA's persisted directed edge list — a
-# long-lived session sweeping entries/sf_dirs holds at most one
-# (the _JACCARD_EDGE_CACHE discipline; r9 advice). Keyed by sf_dir
-# (r10 advice): a same-corpus call reuses the persisted frame;
-# eviction happens only when a DIFFERENT corpus arrives, so a prior
-# call's lazy result stays cache-backed until the corpus changes.
-_lpa_edge_cache: dict = {}
-
-
 def graph_label_propagation(spark, sf_dir):
     """Label-propagation community detection (Raghavan et al. 2007)
     over the user-interaction graph — 2 synchronized rounds from
@@ -2345,21 +2246,12 @@ def graph_label_propagation(spark, sf_dir):
     each extra round repeats the same three-shuffle plan. The argmax
     is min_by over struct(-count, label) — deterministic on ties, the
     same (cnt DESC, label ASC) row_number pick the oracle spells."""
-    # session identity in the key (r11 advice): see
-    # _partition_prefix_offsets — a restart must miss, not hand back a
-    # frame persisted on the stopped context.
-    edge_key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _keyed_cache_hit(_lpa_edge_cache, edge_key)
-    if hit is not None:
-        directed = hit
-    else:
-        E = _user_edges(spark, sf_dir)
-        directed = (
-            E.select(F.col("a").alias("u"), F.col("b").alias("v"))
-            .unionByName(E.select(F.col("b").alias("u"), F.col("a").alias("v")))
-            .persist()
+    E = _user_edges(spark, sf_dir)
+    directed = persist_scoped(
+        E.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
+            E.select(F.col("b").alias("u"), F.col("a").alias("v"))
         )
-        _lpa_edge_cache.update(key=edge_key, df=directed)
+    )
     labels = None
     for _round in range(_LPA_ROUNDS):
         if _round == 0:
@@ -2412,8 +2304,6 @@ def events_sessionize_by_type(spark, sf_dir):
     stitches over per-chunk aggregates (audit tier: agg_input).
     Completing include/expression.hpp:112-121 (the reference parses
     OVER and never executes it) with the 100 TB-safe spelling."""
-    from pyspark import StorageLevel as _StorageLevel
-
     from warpdb_spark.operators.sequence import (
         grouped_lag,
         grouped_prefix_sum,
@@ -2436,7 +2326,13 @@ def events_sessionize_by_type(spark, sf_dir):
     )
     sec = F.col("ts").cast("long")
     psec = F.col("prev_ts").cast("long")
-    j = (
+    # persist (r13): grouped_prefix_sum consumes its input from TWO
+    # parentless branches (the local running sum and the per-chunk
+    # totals), so the whole lag pipeline — corpus window + boundary
+    # stitch — executed twice (verified in the r12 plan: two full
+    # Window+join subtrees from separate scans). The frame is 5 narrow
+    # columns.
+    j = persist_scoped(
         grouped_lag(
             ev, "event_type", ["ts", "event_id"], "ts", F.col("__ck"),
             out_col="prev_ts",
@@ -2446,15 +2342,6 @@ def events_sessionize_by_type(spark, sf_dir):
             F.when(psec.isNull() | ((sec - psec) > 1800), F.lit(1)).otherwise(F.lit(0)),
         )
         .select("event_type", "event_id", "ts", "new_s", "__ck")
-        # persist (r13): grouped_prefix_sum consumes its input from TWO
-        # parentless branches (the local running sum and the per-chunk
-        # totals), so the whole lag pipeline above — corpus window +
-        # boundary stitch — executed twice (verified in the r12 plan:
-        # two full Window+join subtrees from separate scans). The frame
-        # is 5 narrow columns; MEMORY_AND_DISK spills rather than dying
-        # (the _user_edges precedent for corpus-sized derivations with
-        # multiple consumers).
-        .persist(_StorageLevel.MEMORY_AND_DISK)
     )
     s = grouped_prefix_sum(
         j, "event_type", ["ts", "event_id"], F.col("__ck"), "new_s",

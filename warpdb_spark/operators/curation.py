@@ -48,6 +48,8 @@ from typing import Iterable, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from warpdb_spark.persist import persist_scoped
+
 # (name, regex, replacement) — applied IN ORDER. Credit cards first so
 # 4-4-4-4 digit runs are consumed before the shorter SSN/phone shapes
 # can nibble at them; counts are taken on the partially-scrubbed text
@@ -363,33 +365,33 @@ def remove_boilerplate_spans(
     an order-preserving sort inside the aggregate. No pairwise doc
     comparison anywhere — at 100 TB the cost is two corpus-token-volume
     shuffles, independent of duplication structure.
-    """
-    from pyspark import StorageLevel
 
+    The token and span frames sit in ``persist_scoped`` slots: a later call on
+    other input evicts them, and this call's lazy result then recomputes them.
+    """
     from warpdb_spark.functions import text as T
 
-    base = (
+    # three consumers (spans, token posexplode, final join) — lazy
+    # persist so the corpus normalize+split scan runs once, not 3x
+    base = persist_scoped(
         df.select(
             F.col(id_col).alias("__id"),
             F.split(T.normalized_text(F.col(text_col)), " ").alias("__toks"),
-        )
-        .withColumn("__n", F.size("__toks"))
-        # three consumers (spans, token posexplode, final join) — lazy
-        # persist so the corpus normalize+split scan runs once, not 3x
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    spans = base.filter(F.col("__n") >= span).select(
-        "__id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.col("__n") - span),
-                lambda i: F.concat_ws(" ", F.slice("__toks", i + 1, span)),
-            )
-        ).alias("__start", "__span"),
+        ).withColumn("__n", F.size("__toks"))
     )
     # spans feed both the hot-set count and the coverage join — persist
     # so the O(total_tokens) 5-gram explode runs once
-    spans = spans.persist(StorageLevel.MEMORY_AND_DISK)
+    spans = persist_scoped(
+        base.filter(F.col("__n") >= span).select(
+            "__id",
+            F.posexplode(
+                F.transform(
+                    F.sequence(F.lit(0), F.col("__n") - span),
+                    lambda i: F.concat_ws(" ", F.slice("__toks", i + 1, span)),
+                )
+            ).alias("__start", "__span"),
+        )
+    )
     hot = (
         spans.groupBy("__span")
         .agg(F.count_distinct("__id").alias("__nd"))

@@ -164,6 +164,7 @@ def pagerank(
         "id", "rank", F.coalesce("out_degree", F.lit(0)).alias("out_degree")
     )
     e.unpersist()
+    nodes.unpersist()
     e_deg.unpersist()
     return out
 

@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from warpdb_spark.persist import persist_scoped
+
 
 def triangle_counts(edges: DataFrame, src: str = "a", dst: str = "b") -> DataFrame:
     """Per-node triangle participation counts.
@@ -30,9 +32,10 @@ def triangle_counts(edges: DataFrame, src: str = "a", dst: str = "b") -> DataFra
     ``edges`` must be an undirected, deduplicated edge list with
     ``src < dst`` canonical form and no self-loops. Returns
     ``(id, n_triangles)`` for every node in at least one triangle.
-    """
-    from pyspark import StorageLevel
 
+    The oriented edges sit in a ``persist_scoped`` slot: a later call on
+    other input evicts them, and this call's lazy result then recomputes them.
+    """
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     deg = (
         e.select(F.col("a").alias("id"))
@@ -45,11 +48,6 @@ def triangle_counts(edges: DataFrame, src: str = "a", dst: str = "b") -> DataFra
     db = deg.select(F.col("id").alias("b"), F.col("deg").alias("db"))
     keyed = e.join(da, "a").join(db, "b")
     lower_first = F.struct("da", "a") < F.struct("db", "b")
-    oriented = keyed.select(
-        F.when(lower_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(lower_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-        F.when(lower_first, F.col("db")).otherwise(F.col("da")).alias("dv"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
     # Eager materialization (r12, guide §5): `oriented` feeds THREE plan
     # branches (both wedge sides + the closing join). Un-persisted,
     # Catalyst replicated the entire upstream — edge derivation, degree
@@ -58,7 +56,14 @@ def triangle_counts(edges: DataFrame, src: str = "a", dst: str = "b") -> DataFra
     # plan. One O(m)-row cache truncates all of it; the three consumer
     # branches are parentless stages of one job, so without the eager
     # count a cold cache would still be computed concurrently.
-    oriented.count()
+    oriented = persist_scoped(
+        keyed.select(
+            F.when(lower_first, F.col("a")).otherwise(F.col("b")).alias("u"),
+            F.when(lower_first, F.col("b")).otherwise(F.col("a")).alias("v"),
+            F.when(lower_first, F.col("db")).otherwise(F.col("da")).alias("dv"),
+        ),
+        eager=True,
+    )
     o1, o2 = oriented.alias("o1"), oriented.alias("o2")
     # wedges out of the lowest-order corner, far endpoints in order
     wedges = o1.join(o2, F.col("o1.u") == F.col("o2.u")).filter(
