@@ -427,7 +427,7 @@ def test_fingerprints_immune_to_construction_side_effects(spark, sf_dir):
     q, o = inventory.load_all()
     probes = [
         "dialect_tpch_q1",       # bumps the _SQ_SEQ counter
-        "graph_neighbor_jaccard",  # fills _JACCARD_EDGE_CACHE
+        "graph_neighbor_jaccard",  # fills a persist_scoped slot
         "window_qualify",
     ]
     before = {n: FP.entry_fingerprint(q[n], o.get(n)) for n in probes}

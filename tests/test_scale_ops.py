@@ -4,6 +4,8 @@ properties, classifier determinism, global-ordinal consistency, and the
 ``persist_scoped`` slot lifecycle."""
 
 import os
+import sys
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 from pyspark.sql import functions as F
@@ -11,7 +13,6 @@ from pyspark.sql import functions as F
 from warpdb_spark import persist as P
 from warpdb_spark.inventory import scale_ops
 from warpdb_spark.operators.triangles import triangle_counts
-from warpdb_spark.persist import persist_scoped
 
 
 class TestTriangleCounts:
@@ -1345,7 +1346,7 @@ class TestWeightedMedian:
 
 def _slot(df, eager=False):
     """One call site, so one ``persist_scoped`` slot, for the tests below."""
-    return persist_scoped(df, eager=eager)
+    return P.persist_scoped(df, eager=eager)
 
 
 def _frame(spark, n=40, mod=7):
@@ -1464,6 +1465,23 @@ class TestKeyedCacheSlots:
         second = _slot(_frame(spark))
         assert second is not first
         assert second.storageLevel.useMemory
+
+    def test_racing_threads_leave_one_frame_persisted(self, spark):
+        """Threads calling one site with different frames never leak a
+        persisted frame: evict-persist-store is one locked step, so only
+        the frame the slot ends up holding stays persisted."""
+        frames = [_frame(spark, n=40 + i) for i in range(8)]
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            with ThreadPoolExecutor(max_workers=8) as pool:
+                calls = [pool.submit(_slot, frames[i % 8]) for i in range(48)]
+                for call in calls:
+                    call.result(timeout=120)
+        finally:
+            sys.setswitchinterval(interval)
+        persisted = [f for f in frames if f.storageLevel.useMemory]
+        assert persisted == [_held()[1]]
 
 
 # Every inventory entry whose construction reaches a persist_scoped slot.

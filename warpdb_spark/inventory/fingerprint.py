@@ -112,6 +112,7 @@ def _is_immutable_data(value, depth: int = 0) -> bool:
 RUNTIME_STATE: frozenset = frozenset(
     {
         ("warpdb_spark.plans.builder", "_SQ_SEQ"),
+        ("warpdb_spark.sources.readers", "_TABLE_CACHE"),
     }
 )
 

@@ -72,10 +72,9 @@ def persist_scoped(df: DataFrame, eager: bool = False) -> DataFrame:
         tuple(df.columns),
     )
     with _slots_lock:
-        held = _slots.pop(site, None)
+        held = _slots.get(site)
         if held is not None:
             if held[0] == key and _persisted(held[1]):
-                _slots[site] = held
                 return held[1]
             try:
                 held[1].unpersist()
